@@ -645,13 +645,17 @@ def retry_fallback_selector(spark, sf):
 )
 def seen_recrawl_membership(spark, sf):
     """Deletion-aware URL-seen membership (north_star's cuckoo-filter
-    sidecar): new = candidates \\ (seen \\ deleted). The engine path
-    routes through BOTH pruning filters — bloom over seen, per-shard
-    cuckoo over the tombstones — with the exact joins confirming, so
-    the oracle match proves the filters never change the result.
-    Engine integration: CrawlEngine.forget() / _update_seen
-    (plans/loop.py); unit invariants in tests/test_recrawl.py."""
-    from .seen import bloom_build, cuckoo_build, new_urls_exact
+    sidecar): new = candidates \\ (seen \\ deleted). Computed the
+    engine's way: tombstones are a subset of seen, so new is exactly
+    (cand \\ seen) ∪ (deleted ⋉ cand). Both halves route through a
+    pruning filter — the bloom over seen for the first, a per-shard
+    cuckoo over the tombstones for the second — with exact joins
+    confirming, so the oracle match (which computes the general
+    set difference) proves the algebra and the filters never change
+    the result. Engine integration: CrawlEngine.forget() /
+    _update_seen (plans/loop.py); unit invariants in
+    tests/test_recrawl.py."""
+    from .seen import bloom_build, cuckoo_build, cuckoo_prefilter, new_urls_exact
 
     u = T(spark, sf, "orders").select(
         F.concat(
@@ -666,11 +670,12 @@ def seen_recrawl_membership(spark, sf):
     deleted = u.filter("o_orderkey % 3 != 0 and o_orderkey % 7 = 0").select("url").distinct()
     cand = u.filter("o_orderkey % 2 = 0").select("url").distinct()
     params = dict(n_buckets=16, n_bits=1 << 16, k=4)
-    bloom = bloom_build(seen, **params)
-    cuckoo = cuckoo_build(deleted, n_buckets=16)
-    return new_urls_exact(
-        cand, seen, bloom=bloom, deleted=deleted, cuckoo=cuckoo, cuckoo_shards=16, **params
+    appended = new_urls_exact(cand, seen, bloom=bloom_build(seen, **params), **params)
+    maybe_deleted = cuckoo_prefilter(cand, cuckoo_build(deleted, n_buckets=16), n_buckets=16)
+    resurrected = maybe_deleted.filter("maybe_deleted").select("url").join(
+        deleted, "url", "left_semi"
     )
+    return appended.unionByName(resurrected)
 
 
 def _proxy_wave_oracle():

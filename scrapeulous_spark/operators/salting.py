@@ -37,31 +37,29 @@ from pyspark.sql import functions as F
 
 
 def detect_hot_hosts(
-    frontier: DataFrame, n_buckets: int, skew_factor: float = 2.0
+    frontier: DataFrame, n_buckets: int, total: int, skew_factor: float = 2.0
 ) -> list[str]:
-    """Hosts whose row count exceeds skew_factor * (total / n_buckets).
-    The groupBy is map-side combinable (O(hosts) rows shuffle); the
+    """Hosts whose row count exceeds skew_factor * (total / n_buckets),
+    where ``total`` is ``frontier``'s row count — the caller has it
+    already, from the count that materialized its cached source. ONE
+    action: the threshold is a driver-side scalar, so the filter rides
+    the map-side-combined groupBy (O(hosts) rows shuffle) and the
     collect returns < n_buckets / skew_factor rows by the threshold's
-    own arithmetic. ONE action: the threshold is a broadcast scalar
-    subplan over the same cached counts, not a separate collect —
-    driver round trips are constant per-leg latency that the N-vs-4N
-    ratio pays at full price."""
-    counts = frontier.groupBy("host").agg(F.count(F.lit(1)).alias("n")).persist()
-    thr = counts.agg(
-        (F.lit(skew_factor) * F.sum("n") / F.lit(n_buckets)).alias("thr")
-    )
+    own arithmetic."""
+    thr = skew_factor * total / n_buckets
     # NULL hosts (unparseable URLs) are excluded: sorted() would raise
     # on a None among strings, and Column.isin(None) is NULL in SQL, so
     # a "hot" null group could never be salted downstream anyway — the
     # caller's url-salting for hot hosts keys on (host, url) and a null
     # host row set belongs in the cold path by definition
-    hot = [
-        r["host"]
-        for r in counts.join(F.broadcast(thr)).filter(F.col("n") > F.col("thr")).collect()
-        if r["host"] is not None
-    ]
-    counts.unpersist()
-    return sorted(hot)
+    rows = (
+        frontier.filter(F.col("host").isNotNull())
+        .groupBy("host")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > F.lit(thr))
+        .collect()
+    )
+    return sorted(r["host"] for r in rows)
 
 
 def host_bucket_col(

@@ -1,19 +1,29 @@
-"""URL-seen set at scale: partitioned Bloom prefilter + exact anti-join,
-with a cuckoo-filter sidecar for deletions (recrawl/expiry).
+"""URL-seen set at scale: exact broadcast-probe anti-join, an optional
+partitioned Bloom prefilter, and cuckoo-filter operators for deletions.
 
 North-rule component (BASELINE.json north_star): at a 10^10-URL
 frontier the per-superstep "which discovered URLs are new?" anti-join
-is THE hot join. The Bloom filter prunes its probe side:
+is THE hot join. It is planned on its small side (``not_in``): the
+seen table streams through one scan against the broadcast candidates
+and is never shuffled. The Bloom filter (``use_bloom``) prunes that
+probe further:
 
     candidates ──xxhash64 (JVM)──► bucket + k bit positions
         │ cogroup with per-bucket numpy bitmaps (Arrow, vectorized)
-        ├── definitely-new  (bloom miss — skips the anti-join probe)
-        └── maybe-seen      (bloom hit)  ──exact left_anti join──► new
+        ├── definitely-new  (bloom miss — skips the seen probe)
+        └── maybe-seen      (bloom hit)  ──exact not_in(seen)──► new
 
 Exactness is never delegated to the filter: false positives are rescued
 by the confirming anti-join; false negatives are impossible (bitmaps
-are built from the full seen table). Property-tested in
-test_seen_bloom.py: prefiltered result == plain anti-join result.
+are built from the full seen table, which only grows). Property-tested
+in test_seen_bloom.py: prefiltered result == plain anti-join result.
+
+Deletions (recrawl/expiry) need no filter in the engine: tombstones are
+always a subset of seen, so CrawlEngine answers them with exact joins
+against the small ``deleted`` table. ``cuckoo_build`` and
+``cuckoo_prefilter`` are the deletable membership filter over such a
+set, kept as tested operators for a tombstone set too large to
+broadcast.
 
 Sizing: bits_per_bucket=2^23 (1 MiB bitmap) at k=4 holds ~1.2M URLs per
 bucket at ~2% FPR; 10^10 URLs => ~8192 buckets => 8 GiB of bitmaps
@@ -258,60 +268,33 @@ def new_urls_exact(
     candidates: DataFrame,
     seen: DataFrame,
     bloom: DataFrame | None = None,
-    deleted: DataFrame | None = None,
-    cuckoo: DataFrame | None = None,
-    cuckoo_shards: int = 64,
     **bloom_params,
 ) -> DataFrame:
-    """Exactly the candidates not in the EFFECTIVE seen set
-    (``seen`` minus ``deleted`` tombstones). With a bloom, only
-    maybe-seen rows pay the anti-join probe; with a cuckoo sidecar over
-    the tombstones, only maybe-deleted rows pay the (extra) tombstone
-    join. Filters are pruners only — exactness never depends on them."""
+    """Exactly the distinct candidate urls not in ``seen``. With a bloom,
+    only its maybe-seen rows meet ``seen``; the filter is a pruner
+    only — exactness never depends on it."""
+    if bloom is None:
+        # the distinct runs after the probe: the broadcast side needs
+        # no shuffle, and only the surviving rows are deduplicated
+        return not_in(candidates.select("url"), seen).distinct()
     cand = candidates.select("url").distinct()
-    if deleted is None:
-        if bloom is None:
-            return cand.join(seen.select("url"), "url", "left_anti")
-        # localCheckpoint: the stamped frame feeds TWO union branches,
-        # and Spark has no cross-branch reuse for DataFrames — without
-        # materialization the cogrouped bloom probe (the hot path this
-        # module exists to optimize) would run once PER BRANCH
-        stamped = bloom_prefilter(cand, bloom, **bloom_params).localCheckpoint()
-        definitely_new = stamped.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = stamped.filter(F.col("maybe_seen")).drop("maybe_seen")
-        return definitely_new.unionByName(
-            maybe.join(seen.select("url"), "url", "left_anti")
-        )
+    # localCheckpoint: the stamped frame feeds TWO union branches,
+    # and Spark has no cross-branch reuse for DataFrames — without
+    # materialization the cogrouped bloom probe would run once PER BRANCH
+    stamped = bloom_prefilter(cand, bloom, **bloom_params).localCheckpoint()
+    definitely_new = stamped.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    maybe = stamped.filter(F.col("maybe_seen")).drop("maybe_seen")
+    return definitely_new.unionByName(not_in(maybe, seen))
 
-    # tombstone path: new = cand \ (seen \ deleted). The bloom is a
-    # STALE SUPERSET of the effective seen set (blooms cannot delete);
-    # the cuckoo sidecar routes around that staleness without a rebuild.
-    if bloom is not None:
-        # materialized once; consumed by three union branches (above)
-        stamped = bloom_prefilter(cand, bloom, **bloom_params).localCheckpoint()
-        definitely_new = stamped.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = stamped.filter(F.col("maybe_seen")).drop("maybe_seen")
-    else:
-        definitely_new = cand.limit(0)
-        maybe = cand
-    if cuckoo is not None:
-        # shard count MUST match cuckoo_build's: a shard-key mismatch
-        # would turn cuckoo misses into false "not tombstoned" proofs.
-        # (The per-filter bucket count is self-describing — derived
-        # from the blob — so only the shard key needs agreement.)
-        cstamped = cuckoo_prefilter(maybe, cuckoo, n_buckets=cuckoo_shards).localCheckpoint()
-        not_deleted = cstamped.filter(~F.col("maybe_deleted")).drop("maybe_deleted")
-        maybe_del = cstamped.filter(F.col("maybe_deleted")).drop("maybe_deleted")
-    else:
-        not_deleted = maybe.limit(0)
-        maybe_del = maybe
-    # cuckoo-miss => definitely not tombstoned => plain seen anti-join
-    new_a = not_deleted.join(seen.select("url"), "url", "left_anti")
-    # cuckoo-hit => the url may be tombstoned: it is new iff it is NOT
-    # in the effective seen set (seen minus tombstones). Two anti-joins
-    # — never a distinct over the 10^10-row seen table (the previous
-    # shape paid a full shuffle-aggregate of seen per superstep just to
-    # stamp membership flags).
-    effective_seen = seen.select("url").join(deleted.select("url"), "url", "left_anti")
-    new_b = maybe_del.join(effective_seen, "url", "left_anti").select("url")
-    return definitely_new.unionByName(new_a).unionByName(new_b)
+
+def not_in(small: DataFrame, big: DataFrame) -> DataFrame:
+    """``small ▷ big`` on ``url``, planned so ``big`` is never shuffled:
+    ``hits = big ⋉ broadcast(small)`` streams ``big`` through one scan,
+    then ``small ▷ broadcast(hits)``. A plain ``small LEFT ANTI big``
+    can only build its hash table from ``big`` (Spark builds a
+    left-anti join from its right side), so past the broadcast
+    threshold it shuffles all of ``big``. The hint puts a ceiling on
+    ``small`` instead: one superstep's candidates must fit a broadcast,
+    the same ceiling ``CrawlEngine.broadcast_sched_keys`` documents."""
+    hits = big.select("url").join(F.broadcast(small.select("url")), "url", "left_semi")
+    return small.join(F.broadcast(hits), "url", "left_anti")

@@ -20,6 +20,7 @@ criterion evidence).
 
 from __future__ import annotations
 
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -97,14 +98,8 @@ BLOOM = T.StructType(
         T.StructField("bits", T.BinaryType()),
     ]
 )
-# tombstone sidecar: deleted urls (recrawl/expiry) + per-shard cuckoo filters
+# tombstone sidecar: forgotten urls (recrawl/expiry), always a subset of seen
 DELETED = T.StructType([T.StructField("url", T.StringType())])
-CUCKOO = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType()),
-        T.StructField("filter", T.BinaryType()),
-    ]
-)
 METRICS = T.StructType(
     [
         T.StructField("superstep", T.IntegerType()),
@@ -134,7 +129,6 @@ class CrawlEngine:
         bloom_k: int = 4,
         frontier_buckets: int = 32,
         salt_hot_hosts: bool = True,
-        cuckoo_shards: int = 64,
         broadcast_sched_keys: bool = True,
     ):
         self.spark = spark
@@ -146,7 +140,6 @@ class CrawlEngine:
         self.frontier_buckets = frontier_buckets
         self.salt_hot_hosts = salt_hot_hosts
         self.bloom_params = {"n_buckets": bloom_buckets, "n_bits": bloom_bits, "k": bloom_k}
-        self.cuckoo_shards = cuckoo_shards
         # broadcast the scheduled-keys side of the payload joins so the
         # body column streams from the scan with no exchange. Right
         # whenever one superstep's scheduled batch fits a broadcast
@@ -156,7 +149,6 @@ class CrawlEngine:
         self.broadcast_sched_keys = broadcast_sched_keys
         self.bloom = self.wh.table("bloom", BLOOM)
         self.deleted = self.wh.table("deleted", DELETED)
-        self.cuckoo = self.wh.table("cuckoo", CUCKOO)
         self.crawl_order = self.wh.table("crawl_order", CRAWL_ORDER)
         self.seen = self.wh.table("seen", SEEN)
         self.entities = self.wh.table("entities", ENTITIES)
@@ -177,6 +169,8 @@ class CrawlEngine:
         # commit can all be in flight at once
         self._pool = ThreadPoolExecutor(max_workers=3)
         self._validate_fut = None
+        self._inputs: dict[str, DataFrame] = {}
+        self._inputs_lock = threading.Lock()  # _read runs on the overlap threads too
 
     def _overlap(self, fn, *args, pool: str = "extract", **kwargs):
         """Run fn on a background thread in its own FAIR pool."""
@@ -192,7 +186,12 @@ class CrawlEngine:
     # ------------------------------------------------------------ inputs
 
     def _read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.paths[name])
+        """The corpus input ``name``, read once per engine: every
+        ``spark.read.parquet`` runs a schema-inference job."""
+        with self._inputs_lock:
+            if name not in self._inputs:
+                self._inputs[name] = self.spark.read.parquet(self.paths[name])
+            return self._inputs[name]
 
     # ----------------------------------------------------------- metrics
 
@@ -221,20 +220,21 @@ class CrawlEngine:
         )
         self.metrics.append(m, lineage={"superstep": superstep, "stage": stage})
 
-    def _hot_hosts(self, hosts: DataFrame) -> list[str]:
-        """Hot-host detection over a CHEAP, already-materialized source —
+    def _hot_hosts(self, hosts: DataFrame, total: int) -> list[str]:
+        """Hot-host detection over a persisted, already-counted source —
         never a second pass over the unmaterialized expansion (measured:
         re-deriving the candidate set just to count hosts cost ~60% of
-        crawl wall). At depth 0 the source is the seed-host histogram,
-        which is exact up to per-seed branching variance: the same-host
-        gate (social.js:115-119) makes every candidate's host equal its
-        seed's host. At deeper depths it is the current frontier's host
-        column — a metadata-only scan of the partitioned parquet."""
+        crawl wall). ``total`` is that source's row count, which the
+        loop has just taken to materialize it, so the detection is one
+        action (salting.detect_hot_hosts). At depth 0 the source is the
+        cached candidate set itself, the exact histogram of the frontier
+        being written. At deeper depths it is the cached depth-d
+        scheduling window, one row per frontier row."""
         if not self.salt_hot_hosts:
             return []
         from ..operators.salting import detect_hot_hosts
 
-        return detect_hot_hosts(hosts, self.frontier_buckets)
+        return detect_hot_hosts(hosts, self.frontier_buckets, total)
 
     def _write_frontier(self, cands: DataFrame, lineage: dict, hot: list[str]) -> None:
         """Commit the frontier with salted host-bucket partitioning
@@ -263,100 +263,96 @@ class CrawlEngine:
         return bool(cur and cur["dirs"])
 
     def _update_seen(self, urls: DataFrame, superstep: int):
-        """Exact seen-set MERGE over the EFFECTIVE seen set
-        (seen minus deleted tombstones). With use_bloom, the partitioned
-        Bloom filter (seen.py) prunes the anti-join probe side — only
-        maybe-seen rows pay the join; the filter is maintained
-        incrementally by OR-merging a delta built from just the
-        newly-admitted urls. With tombstones (forget()/recrawl), the
-        cuckoo sidecar routes around the bloom's staleness (blooms
-        cannot delete) — only maybe-deleted rows pay the tombstone
-        join, and re-admitted urls are resurrected by DROPPING their
-        tombstone, never by re-appending to the big seen table.
-        Exactness NEVER depends on either filter: false positives are
-        rescued by the confirming joins (tests/test_seen_bloom.py,
-        tests/test_recrawl.py)."""
-        cand = urls.select("url").distinct()
-        seen = self.seen.read(self.spark)
-        tomb = self._has_tombstones()
-        if not self.use_bloom and not tomb:
-            new = cand.join(seen, "url", "left_anti")
-            self.seen.append(new, lineage={"superstep": superstep})
-            return
-        from ..operators.seen import bloom_build, bloom_merge, cuckoo_build, new_urls_exact
+        """Exact seen-set MERGE: the effective seen set (seen minus the
+        ``deleted`` tombstones) becomes itself plus ``urls``.
 
-        bloom = self.bloom.read(self.spark) if self.use_bloom else None
-        deleted = self.deleted.read(self.spark) if tomb else None
-        cuckoo = self.cuckoo.read(self.spark) if tomb else None
-        params = self.bloom_params if self.use_bloom else {}
-        new = new_urls_exact(
-            cand,
-            seen,
-            bloom=bloom,
-            deleted=deleted,
-            cuckoo=cuckoo,
-            cuckoo_shards=self.cuckoo_shards,
-            **params,
-        ).persist()
-        if tomb:
-            resurrected = new.join(deleted, "url", "leftsemi").persist()
-            brand_new = new.join(deleted, "url", "left_anti").persist()
-            if not resurrected.isEmpty():
-                remaining = deleted.join(resurrected, "url", "left_anti").persist()
+        Invariant: ``deleted ⊆ seen``. forget() only tombstones urls
+        already in seen, seen is append-only, and both tables roll back
+        together. So with ``cand`` the distinct candidate urls:
+
+          * the rows to append are exactly ``cand \\ seen``, planned on
+            the small side (seen.new_urls_exact): ``hits = seen ⋉
+            broadcast(cand)``, then ``cand ▷ broadcast(hits)``. ``seen``
+            streams through one scan; it is never shuffled or broadcast;
+          * the tombstones to drop (resurrection: a forgotten url is
+            found again) are exactly ``deleted ⋉ broadcast(cand)``. The
+            big seen table is never rewritten; ``deleted`` is rewritten
+            once, as ``deleted ▷ broadcast(cand)``, and only when that
+            set is non-empty.
+
+        With use_bloom, the Bloom filter prunes the probe: only its
+        maybe-seen candidates meet ``seen`` (_append_seen_bloom).
+        forget() cannot make it stale for this question, because seen
+        only grows (tombstoned urls stay in it). Tombstones need no
+        filter: ``deleted`` is small, and the join above is exact.
+        Exactness never depends on the filter: its false positives are
+        rescued by the confirming join (tests/test_seen_bloom.py,
+        tests/test_recrawl.py)."""
+        from ..operators.seen import new_urls_exact
+
+        cand = urls.select("url")
+        seen = self.seen.read(self.spark)
+        if self.use_bloom:
+            self._append_seen_bloom(cand, seen, superstep)
+        else:
+            self.seen.append(new_urls_exact(cand, seen), lineage={"superstep": superstep})
+        if self._has_tombstones():
+            deleted = self.deleted.read(self.spark)
+            if not deleted.join(F.broadcast(cand), "url", "left_semi").isEmpty():
                 self.deleted.overwrite(
-                    remaining, lineage={"superstep": superstep, "stage": "resurrect"}
-                )
-                self.cuckoo.overwrite(
-                    cuckoo_build(remaining, n_buckets=self.cuckoo_shards),
+                    deleted.join(F.broadcast(cand), "url", "left_anti"),
                     lineage={"superstep": superstep, "stage": "resurrect"},
                 )
-                remaining.unpersist()
-            resurrected.unpersist()
+
+    def _append_seen_bloom(self, cand: DataFrame, seen: DataFrame, superstep: int):
+        """The filter path of _update_seen: append ``cand \\ seen``
+        with the Bloom prefilter, then OR-merge a delta of the appended
+        urls into the filter. The filter's lineage records the seen
+        snapshot it covers. A filter built from another snapshot (or
+        never: the warehouse ran without it) would miss the urls
+        appended since, so it is rebuilt from the whole seen table
+        before it is probed."""
+        from ..operators.seen import bloom_build, bloom_merge, new_urls_exact
+
+        p = self.bloom_params
+        covered = ((self.bloom.current() or {}).get("lineage") or {}).get("seen_snapshot", 0)
+        if covered == (self.seen.current() or {"snapshot_id": 0})["snapshot_id"]:
+            bloom = self.bloom.read(self.spark)
         else:
-            brand_new = new
-        self.seen.append(brand_new, lineage={"superstep": superstep})
-        if self.use_bloom:
-            delta = bloom_build(
-                brand_new,
-                n_buckets=self.bloom_params["n_buckets"],
-                n_bits=self.bloom_params["n_bits"],
-                k=self.bloom_params["k"],
-            )
-            self.bloom.overwrite(
-                bloom_merge(bloom, delta, n_bits=self.bloom_params["n_bits"]),
-                lineage={"superstep": superstep, "stage": "bloom_merge"},
-            )
-        if tomb:
-            brand_new.unpersist()
+            bloom = bloom_build(seen, **p).persist()  # probed, then merged
+        new = new_urls_exact(cand, seen, bloom=bloom, **p).persist()
+        snap = self.seen.append(new, lineage={"superstep": superstep})
+        self.bloom.overwrite(
+            bloom_merge(bloom, bloom_build(new, **p), n_bits=p["n_bits"]),
+            lineage={
+                "superstep": superstep,
+                "stage": "bloom_merge",
+                "seen_snapshot": snap["snapshot_id"],
+            },
+        )
         new.unpersist()
+        bloom.unpersist()
 
     # ------------------------------------------------------ recrawl/expiry
 
     def forget(self, urls: DataFrame) -> None:
         """Tombstone previously-seen URLs so a later crawl re-admits and
-        re-fetches them (recrawl/expiry — the deletion semantics the
-        Bloom filter cannot express, north_star's cuckoo sidecar).
+        re-fetches them (recrawl/expiry — the deletion the append-only
+        seen table and its Bloom filter cannot express).
 
-        MERGE-shape at 10^10 scale: the big append-only ``seen`` table
-        is NEVER rewritten; only the small tombstone set is (overwrite
-        of deleted + rebuild of its per-shard cuckoo filters, both
-        O(|tombstones|))."""
-        from ..operators.seen import cuckoo_build
-
-        tombs = (
-            urls.select("url")
-            .distinct()
-            .join(self.seen.read(self.spark), "url", "leftsemi")
-        )
+        The new tombstone set is ``seen ⋉ broadcast(urls ∪ deleted)``:
+        a never-seen url is dropped, and since ``deleted ⊆ seen`` the
+        result is exactly the old tombstones plus the newly forgotten
+        urls, each once, with no distinct. One scan of ``seen``, no
+        shuffle of it, and one overwrite of the small ``deleted`` table;
+        the big append-only ``seen`` table is never rewritten."""
+        keys = urls.select("url")
         if self._has_tombstones():
-            tombs = self.deleted.read(self.spark).unionByName(tombs).distinct()
-        tombs = tombs.persist()
-        self.deleted.overwrite(tombs, lineage={"stage": "forget"})
-        self.cuckoo.overwrite(
-            cuckoo_build(tombs, n_buckets=self.cuckoo_shards),
+            keys = keys.unionByName(self.deleted.read(self.spark))
+        self.deleted.overwrite(
+            self.seen.read(self.spark).join(F.broadcast(keys), "url", "left_semi"),
             lineage={"stage": "forget"},
         )
-        tombs.unpersist()
 
     # --------------------------------------------------------- supersteps
 
@@ -443,9 +439,10 @@ class CrawlEngine:
                 .withColumn("depth", F.lit(1))
                 .persist()
             )
-            cands.count()  # materialize ONCE: the commit thread and the
-            # seen/seen_pairs unions below all read this cache
-            hot = self._hot_hosts(ok.select(U.host_col(F.col("url")).alias("host")))
+            # materialize ONCE: the commit thread, hot-host detection and
+            # the seen/seen_pairs unions below all read this cache
+            n_cands = cands.count()
+            hot = self._hot_hosts(cands.select("host"), n_cands)
             # the frontier commit runs on its own pool: nothing below
             # reads the TABLE (the seen/seen_pairs unions take the same
             # rows from the in-memory cands plan, which is what the
@@ -492,8 +489,9 @@ class CrawlEngine:
 
         return finish, frontier_fut
 
-    def _sched_for_depth(self, d: int) -> DataFrame:
-        """Build and MATERIALIZE the depth-d scheduling window (persisted).
+    def _sched_for_depth(self, d: int) -> tuple[DataFrame, int]:
+        """Build and MATERIALIZE the depth-d scheduling window (persisted),
+        returned with its row count (one row per depth-d frontier row).
         Pure reads of already-committed tables (frontier, crawl_order,
         page/budget stores) — no writes — so run() can compute it on the
         main thread while the previous superstep's extraction future
@@ -526,19 +524,18 @@ class CrawlEngine:
             )
             .persist()
         )
-        sched.count()
-        return sched
+        return sched, sched.count()
 
-    def _superstep_depth(self, d: int, sched: DataFrame | None = None):
-        """Pop-and-fetch the depth-d frontier; expand into depth d+1 when
-        d < link_depth (multi-depth engine extension; at d == 1 with
-        link_depth == 1 this is exactly the reference semantics).
-        Returns a finish() closure like _superstep_seeds."""
+    def _superstep_depth(self, d: int, sched: DataFrame, n_sched: int):
+        """Pop-and-fetch the depth-d frontier of the materialized
+        scheduling window ``sched`` (``n_sched`` rows, from
+        _sched_for_depth); expand into depth d+1 when d < link_depth
+        (multi-depth engine extension; at d == 1 with link_depth == 1
+        this is exactly the reference semantics). Returns a finish()
+        closure like _superstep_seeds."""
         t0 = time.time()
         pages = self._read("pages")
         robots = self._read("robots")
-        if sched is None:
-            sched = self._sched_for_depth(d)
         popped = sched.filter("scheduled")
         self.crawl_order.append(
             popped.select(
@@ -606,7 +603,7 @@ class CrawlEngine:
             # carries exactly one row per frontier row and is already
             # persisted, so read it from cache instead of re-scanning
             # the frontier table
-            hot = self._hot_hosts(sched.select("host"))
+            hot = self._hot_hosts(sched.select("host"), n_sched)
             frontier_fut = self._overlap(
                 self._write_frontier,
                 nxt,
@@ -700,13 +697,12 @@ class CrawlEngine:
             "payload_report": self.payload_report,
             "bloom": self.bloom,
             "deleted": self.deleted,
-            "cuckoo": self.cuckoo,
             "metrics": self.metrics,
         }
 
     # tables whose state is GLOBAL across crawl rounds (the url-seen
     # world-state); everything else is per-round output
-    KEEP_ACROSS_ROUNDS = ("seen", "bloom", "deleted", "cuckoo")
+    KEEP_ACROSS_ROUNDS = ("seen", "bloom", "deleted")
 
     def new_round(self) -> None:
         """Begin a fresh crawl round over the same warehouse: truncate
@@ -776,26 +772,15 @@ class CrawlEngine:
             pending = (fin, 1, ffut)
         for d in range(1, self.link_depth + 1):
             if state["superstep"] <= d:
-                sched = None
-                if pending is not None:
-                    if pending[2] is not None:
-                        pending[2].result()  # frontier committed before the read
-                    sched = self._sched_for_depth(d)
+                if pending is not None and pending[2] is not None:
+                    pending[2].result()  # frontier committed before the read
+                sched, n_sched = self._sched_for_depth(d)
                 drain()
-                if d > 1:
-                    empty = (
-                        sched.isEmpty()
-                        if sched is not None
-                        else self.frontier.read(self.spark)
-                        .filter(F.col("depth") == d)
-                        .isEmpty()
-                    )
-                    if empty:
-                        if sched is not None:
-                            sched.unpersist()
-                        self._checkpoint(d + 1)
-                        continue
-                fin, ffut = self._superstep_depth(d, sched=sched)
+                if d > 1 and n_sched == 0:  # frontier exhausted early
+                    sched.unpersist()
+                    self._checkpoint(d + 1)
+                    continue
+                fin, ffut = self._superstep_depth(d, sched, n_sched)
                 pending = (fin, d + 1, ffut)
         if state["superstep"] <= self.link_depth + 1:
             drain()
@@ -810,10 +795,11 @@ class CrawlEngine:
 
     def result_seen(self) -> DataFrame:
         """Effective seen set: the append-only seen table minus any
-        tombstones (anti-join only materializes when forget() was used)."""
+        tombstones (the anti-join exists only once forget() was used).
+        The small tombstone set is the broadcast side; seen streams."""
         seen = self.seen.read(self.spark)
         if self._has_tombstones():
-            seen = seen.join(self.deleted.read(self.spark), "url", "left_anti")
+            seen = seen.join(F.broadcast(self.deleted.read(self.spark)), "url", "left_anti")
         return seen
 
     def result_entities(self) -> DataFrame:

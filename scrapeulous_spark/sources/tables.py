@@ -28,6 +28,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -43,20 +44,36 @@ class SnapshotTable:
     # ---------------------------------------------------------- snapshots
 
     def snapshots(self) -> list[dict]:
-        files = sorted(os.listdir(self._snap_dir))
-        return [json.load(open(os.path.join(self._snap_dir, f))) for f in files]
+        # only committed manifests: a concurrent commit's ``.tmp-*`` file
+        # may still be half-written until its os.replace
+        files = sorted(f for f in os.listdir(self._snap_dir) if f.endswith(".json"))
+        out = []
+        for f in files:
+            with open(os.path.join(self._snap_dir, f)) as fh:
+                out.append(json.load(fh))
+        return out
 
     def current(self) -> dict | None:
         snaps = self.snapshots()
         return snaps[-1] if snaps else None
 
-    def _commit(self, dirs: list[str], lineage: dict | None) -> dict:
+    def _commit(
+        self, sub: str, partition_by: str | None, lineage: dict | None, base: dict | None = None
+    ) -> dict:
+        """Commit a snapshot of ``base``'s data dirs (none: an overwrite)
+        plus the new dir ``sub``. Each dir's layout (hive-partitioned on
+        a column, or plain) is recorded here, once, so read() never
+        lists a dir to find it."""
+        partitioned = _layout(base) if base else {}
+        if partition_by:
+            partitioned[sub] = partition_by
         cur = self.current()
         snap = {
             "snapshot_id": (cur["snapshot_id"] + 1) if cur else 1,
             "parent_id": cur["snapshot_id"] if cur else None,
             "ts": time.time(),
-            "dirs": dirs,
+            "dirs": (base["dirs"] if base else []) + [sub],
+            "partitioned": partitioned,
             "lineage": lineage or {},
         }
         tmp = os.path.join(self._snap_dir, f".tmp-{uuid.uuid4().hex}")
@@ -79,8 +96,7 @@ class SnapshotTable:
         self, df: DataFrame, lineage: dict | None = None, partition_by: str | None = None
     ) -> dict:
         cur = self.current()
-        dirs = (cur["dirs"] if cur else []) + [self._write_data(df, partition_by)]
-        return self._commit(dirs, lineage)
+        return self._commit(self._write_data(df, partition_by), partition_by, lineage, base=cur)
 
     def overwrite(
         self, df: DataFrame, lineage: dict | None = None, partition_by: str | None = None
@@ -89,7 +105,7 @@ class SnapshotTable:
         Old data dirs stay on disk for time travel until vacuum().
         partition_by hive-partitions the data dir (Iceberg partition-spec
         analog) so per-partition reads are directory-pruned scans."""
-        return self._commit([self._write_data(df, partition_by)], lineage)
+        return self._commit(self._write_data(df, partition_by), partition_by, lineage)
 
     def merge(
         self,
@@ -117,8 +133,6 @@ class SnapshotTable:
         every replay would re-insert it — silently breaking replay
         idempotence) is rejected up front. Both probes run on the
         small delta side only."""
-        from pyspark.sql import functions as F
-
         null_pred = None
         for k in key_cols:
             c = F.col(k).isNull()
@@ -140,7 +154,7 @@ class SnapshotTable:
         target = self.read(spark)
         survivors = target.join(source.select(*key_cols), key_cols, "left_anti")
         merged = survivors.unionByName(source)
-        return self._commit([self._write_data(merged, partition_by)], lineage)
+        return self._commit(self._write_data(merged, partition_by), partition_by, lineage)
 
     # ---------------------------------------------------------------- read
 
@@ -151,13 +165,26 @@ class SnapshotTable:
             if not snaps:
                 raise KeyError(f"{self.name}: no snapshot {snapshot_id}")
         if not snaps or not snaps[-1]["dirs"]:
-            return spark.createDataFrame([], self.schema)
-        # one scan per data dir, unioned by name: a snapshot may mix
-        # hive-partitioned dirs (partition_by writes) with plain ones,
-        # and a single multi-path scan rejects that layout mix
-        # (CONFLICTING_DIRECTORY_STRUCTURES). Per-dir scans keep
-        # column pruning and partition pruning per commit.
-        parts = [spark.read.schema(self.schema).parquet(d) for d in snaps[-1]["dirs"]]
+            # an always-false filter, which the optimizer folds into an
+            # empty relation: joins against an empty table vanish from
+            # the plan (createDataFrame([]) is an opaque RDD scan)
+            return spark.range(1).select(
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in self.schema.fields]
+            ).where(F.lit(False))
+        # ONE multi-path scan over every plain data dir, plus one scan per
+        # hive-partitioned dir (a multi-path scan rejects that layout mix:
+        # CONFLICTING_DIRECTORY_STRUCTURES), unioned by name. A scan per
+        # commit would make the plan grow with the commit count, and
+        # Spark pushes joins through the union into every branch (one
+        # broadcast probe per commit). The layout comes from the
+        # manifest, so the read lists nothing but the files it scans.
+        snap = snaps[-1]
+        partitioned = _layout(snap)
+        plain = [d for d in snap["dirs"] if d not in partitioned]
+        reader = spark.read.schema(self.schema)
+        parts = ([reader.parquet(*plain)] if plain else []) + [
+            reader.parquet(d) for d in snap["dirs"] if d in partitioned
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -205,5 +232,10 @@ class Warehouse:
             json.dump(state, f)
         os.replace(tmp, self._state_path)
 
-    def destroy(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
+
+
+def _layout(snap: dict) -> dict[str, str]:
+    """A snapshot's hive-partitioned data dirs -> partition column. A
+    manifest without the key predates the record; its dirs read as one
+    scan, which serves any single dir of either layout."""
+    return dict(snap.get("partitioned", {}))

@@ -10,11 +10,19 @@ is caught by tests instead of a benchmark run:
     column-pruned to the requested columns (no body bytes read)
   * the salted frontier layout supports partition-pruned per-bucket
     reads (PartitionFilters on host_bucket)
+  * the seen-set joins (superstep MERGE, forget, result_seen) never
+    shuffle `seen`, even above the broadcast threshold, and a snapshot
+    table's plain commits read as one file scan
+  * a recrawl round submits a bounded number of Spark jobs
 """
+
+import re
+import uuid
 
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from scrapeulous_spark.operators.fetch import fetch_join, payload_join
 from scrapeulous_spark.operators.frontier import expand_candidates, schedule_pops
@@ -104,6 +112,183 @@ def test_frontier_bucket_read_partition_pruned(spark, tmp_path, corpus):
     assert "PartitionFilters" in plan
     pf_line = next(ln for ln in plan.splitlines() if "PartitionFilters" in ln)
     assert "host_bucket" in pf_line
+
+
+def test_plain_table_read_is_one_scan(spark, tmp_path):
+    """A snapshot table's plain commits are one multi-path scan, not a
+    union of one scan per commit: the plan does not grow with the
+    commit count, and a join cannot be pushed into every commit."""
+    from scrapeulous_spark.sources.tables import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path), "t", T.StructType([T.StructField("url", T.StringType())]))
+    for i in range(3):
+        t.append(spark.createDataFrame([(f"u{i}",)], ["url"]))
+    df = t.read(spark)
+    scans = [ln for ln in df._jdf.queryExecution().executedPlan().toString().splitlines()
+             if "FileScan" in ln]
+    assert len(scans) == 1, scans
+    assert sorted(r.url for r in df.collect()) == ["u0", "u1", "u2"]
+
+
+def _executed_plans(spark, fn) -> list[str]:
+    """The executed physical plans (AQE final plans) of every SQL
+    execution ``fn`` runs, from the session's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        xs = store.executionsList()
+        return [xs.apply(i) for i in range(xs.size())]
+
+    bus.waitUntilEmpty(60_000)
+    before = max((e.executionId() for e in executions()), default=-1)
+    fn()
+    bus.waitUntilEmpty(60_000)
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() > before]
+
+
+def _final_tree(plan: str) -> list[str]:
+    """Tree lines of a formatted plan's final (executed) plan."""
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    marks = [i for i, ln in enumerate(tree) if re.search("== (Final|Current) Plan ==", ln)]
+    if marks:
+        end = next((i for i, ln in enumerate(tree) if "== Initial Plan ==" in ln), len(tree))
+        tree = tree[marks[0] + 1 : end]
+    return tree
+
+
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-*"))
+
+
+def _shuffles_above(plan: str, location: str) -> list[str]:
+    """Shuffle exchanges that the rows of a scan of ``location`` cross in
+    the executed plan: on the path from the scan up to the root, or up
+    to the first broadcast, past which its rows are a hash table that
+    other rows probe, never a stream."""
+    scans = {
+        b.split()[0]
+        for b in plan.split("\n\n")[1:]
+        if b.split()[1:2] == ["Scan"] and location in b
+    }
+    tree = _final_tree(plan)
+    found = []
+    for i, ln in enumerate(tree):
+        node = re.search(r"\(\d+\)", ln)
+        if node is None or node.group(0) not in scans:
+            continue
+        depth = _depth(ln)
+        for up in reversed(tree[:i]):
+            if _depth(up) >= depth:
+                continue
+            depth = _depth(up)
+            name = up.lstrip(" :+-*")
+            if name.startswith(("BroadcastExchange", "BroadcastQueryStage")):
+                break
+            if name.startswith(("Exchange", "ShuffleQueryStage", "AQEShuffleRead")):
+                found.append(name)
+    return found
+
+
+@pytest.fixture()
+def tombstoned_engine(spark, tmp_path):
+    """An engine whose seen table (three commits) is far above a lowered
+    broadcast threshold, with tombstones present."""
+    from scrapeulous_spark.plans.loop import CrawlEngine
+
+    eng = CrawlEngine(spark, str(tmp_path / "wh"), ensure_corpus(SMOKE), validate_images=False)
+    urls = [f"http://h{i % 7}.example.com/p{i}" for i in range(6000)]
+    for k in range(3):
+        eng.seen.append(spark.createDataFrame([(u,) for u in urls[k::3]], ["url"]))
+    eng.forget(spark.createDataFrame([(u,) for u in urls[:600]], ["url"]))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")  # |seen| is ~100 KB of parquet
+    yield eng, urls
+    spark.conf.set(key, old)
+
+
+def _assert_seen_never_shuffled(plans: list[str]):
+    assert plans
+    for plan in plans:
+        assert "SortMergeJoin" not in "\n".join(_final_tree(plan)), plan
+        assert _shuffles_above(plan, "/seen/data/") == [], plan
+
+
+def test_update_seen_never_shuffles_seen(spark, tombstoned_engine):
+    eng, urls = tombstoned_engine
+    cand = spark.createDataFrame(
+        [(u,) for u in urls[300:900]] + [(f"http://new.example.com/{i}",) for i in range(50)],
+        ["url"],
+    )
+    plans = _executed_plans(spark, lambda: eng._update_seen(cand, superstep=1))
+    _assert_seen_never_shuffled(plans)
+    # and the result is exact: 50 appended, 300 tombstones dropped
+    assert eng.seen.read(spark).count() == len(urls) + 50
+    assert eng.deleted.read(spark).count() == 300
+
+
+def test_forget_never_shuffles_seen(spark, tombstoned_engine):
+    eng, urls = tombstoned_engine
+    victims = spark.createDataFrame([(u,) for u in urls[500:1000]] + [("http://x.example.com/",)], ["url"])
+    _assert_seen_never_shuffled(_executed_plans(spark, lambda: eng.forget(victims)))
+    assert eng.deleted.read(spark).count() == 1000
+
+
+def test_result_seen_never_shuffles_seen(spark, tombstoned_engine):
+    eng, urls = tombstoned_engine
+    out = []
+    _assert_seen_never_shuffled(_executed_plans(spark, lambda: out.extend(eng.result_seen().collect())))
+    assert sorted(r.url for r in out) == sorted(urls[600:])
+
+
+def _jobs_submitted(spark, fn) -> int:
+    """Spark jobs ``fn`` submits, on any thread: job ids are sequential
+    per SparkContext, so count the ids between two one-job probes."""
+    sc = spark.sparkContext
+    key = "spark.jobGroup.id"
+    prev = sc.getLocalProperty(key)
+
+    def probe() -> int:
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setLocalProperty(key, group)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty(key, prev)
+        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        return job
+
+    first = probe()
+    fn()
+    return probe() - first - 1
+
+
+# jobs of one SMOKE recrawl round, measured when this guard was set; the
+# slack absorbs AQE re-planning, not a new job per superstep
+RECRAWL_ROUND_JOBS = 88
+RECRAWL_ROUND_SLACK = 5
+
+
+def test_recrawl_round_job_count(spark, tmp_path):
+    """forget -> new_round -> run(resume=True) at link_depth=2 runs at
+    most the measured number of Spark jobs: every job is fixed latency
+    that the round pays whatever its data size."""
+    from scrapeulous_spark.plans.loop import CrawlEngine
+
+    eng = CrawlEngine(
+        spark, str(tmp_path / "wh"), ensure_corpus(SMOKE), link_depth=2, validate_images=False
+    )
+    eng.run()
+    victims = [r.url for r in eng.result_seen().collect()][::4]
+
+    def round_():
+        eng.forget(spark.createDataFrame([(u,) for u in victims], ["url"]))
+        eng.new_round()
+        eng.run(resume=True)
+
+    jobs = _jobs_submitted(spark, round_)
+    assert jobs <= RECRAWL_ROUND_JOBS + RECRAWL_ROUND_SLACK, jobs
 
 
 def test_payload_join_broadcasts_key_side(corpus):

@@ -1,15 +1,19 @@
-"""Recrawl/expiry (cuckoo tombstone sidecar) tests.
+"""Recrawl/expiry (tombstone) tests.
 
 North-rule component: "URL-seen dedup uses a partitioned Bloom filter
 with a cuckoo-filter sidecar for deletions". Properties:
 
-  * new_urls_exact with tombstones == plain set algebra
-    cand \\ (seen \\ deleted), with and without the pruning filters
+  * the engine's algebra under ``deleted ⊆ seen`` — append
+    cand \\ seen, drop the tombstones deleted ⋉ cand — re-admits
+    exactly cand \\ (seen \\ deleted), with and without the Bloom
+    prefilter
   * cuckoo prefilter never false-negatives (a miss proves
     not-tombstoned)
   * engine: forget() shrinks the effective seen set; a later
     _update_seen re-admits the forgotten url by DROPPING its tombstone
     (no duplicate rows in the big append-only seen table)
+  * a warehouse may switch between the plain and the filter path
+    between rounds without changing any result
 """
 
 import pytest
@@ -47,26 +51,26 @@ def _expected(seen, deleted, cand):
     )
 
 
+def _readmitted(seen, deleted, cand, **bloom) -> list[str]:
+    """CrawlEngine._update_seen's algebra: the appended urls
+    (cand \\ seen) plus the dropped tombstones (deleted ⋉ cand)."""
+    appended = new_urls_exact(cand, seen, **bloom)
+    dropped = deleted.join(cand.select("url"), "url", "left_semi")
+    return sorted(r.url for r in appended.unionByName(dropped).collect())
+
+
 def test_tombstone_membership_exact_no_filters(spark, frames):
     seen, deleted, cand = frames
-    got = sorted(r.url for r in new_urls_exact(cand, seen, deleted=deleted).collect())
-    assert got == _expected(seen, deleted, cand)
+    assert _readmitted(seen, deleted, cand) == _expected(seen, deleted, cand)
 
 
 def test_tombstone_membership_exact_with_filters(spark, frames):
     seen, deleted, cand = frames
     params = dict(n_buckets=16, n_bits=1 << 16, k=4)
     bloom = bloom_build(seen, **params).persist()
-    cuckoo = cuckoo_build(deleted, n_buckets=16).persist()
-    got = sorted(
-        r.url
-        for r in new_urls_exact(
-            cand, seen, bloom=bloom, deleted=deleted, cuckoo=cuckoo, cuckoo_shards=16, **params
-        ).collect()
-    )
+    got = _readmitted(seen, deleted, cand, bloom=bloom, **params)
     assert got == _expected(seen, deleted, cand)
     bloom.unpersist()
-    cuckoo.unpersist()
 
 
 def test_cuckoo_prefilter_no_false_negatives(spark, frames):
@@ -92,7 +96,7 @@ def test_engine_forget_and_resurrect(spark, tmp_path):
 
     paths = ensure_corpus(SMOKE)
     eng = CrawlEngine(
-        spark, str(tmp_path / "wh"), paths, validate_images=False, cuckoo_shards=8
+        spark, str(tmp_path / "wh"), paths, validate_images=False
     )
     eng.run()
     seen0 = sorted(r.url for r in eng.result_seen().collect())
@@ -125,8 +129,8 @@ def test_engine_forget_and_resurrect(spark, tmp_path):
 
 
 def test_engine_forget_with_bloom_identical(spark, tmp_path):
-    """The bloom's staleness after forget() (blooms cannot delete) must
-    not change any result: bloom+cuckoo path == plain path."""
+    """forget() cannot delete from the bloom; it must not change any
+    result: bloom path == plain path."""
     from scrapeulous_spark.plans.loop import CrawlEngine
     from scrapeulous_spark.sources.corpus import SMOKE, ensure_corpus
 
@@ -141,7 +145,6 @@ def test_engine_forget_with_bloom_identical(spark, tmp_path):
             use_bloom=use_bloom,
             bloom_buckets=8,
             bloom_bits=1 << 16,
-            cuckoo_shards=8,
         )
         eng.run()
         seen0 = sorted(r.url for r in eng.result_seen().collect())
@@ -163,7 +166,7 @@ def test_engine_recrawl_rounds(spark, tmp_path):
 
     paths = ensure_corpus(SMOKE)
     eng = CrawlEngine(
-        spark, str(tmp_path / "wh"), paths, validate_images=False, cuckoo_shards=8
+        spark, str(tmp_path / "wh"), paths, validate_images=False
     )
     eng.run()
     seen1 = sorted(r.url for r in eng.result_seen().collect())
@@ -180,6 +183,40 @@ def test_engine_recrawl_rounds(spark, tmp_path):
     assert sorted(map(tuple, eng.result_crawl_order().collect())) == order1
     assert eng.seen.read(spark).count() == physical1  # no duplicate appends
     assert eng.deleted.read(spark).count() == 0  # all tombstones drained
+
+
+def test_filter_round_after_plain_round_identical(spark, tmp_path):
+    """One warehouse, round 1 on the plain path (forget, then the crawl
+    resurrects the victims), round 2 on the Bloom path (forget again,
+    crawl again): the filter was never built in round 1, so round 2
+    must rebuild it before probing, and every result equals a warehouse
+    that stayed on the plain path — no url appended twice, no
+    tombstone left or lost."""
+    from scrapeulous_spark.plans.loop import CrawlEngine
+    from scrapeulous_spark.sources.corpus import SMOKE, ensure_corpus
+
+    paths = ensure_corpus(SMOKE)
+    outs = {}
+    for label, bloom2 in (("plain", False), ("mixed", True)):
+        root = str(tmp_path / label)
+        eng = CrawlEngine(spark, root, paths, validate_images=False)
+        eng.run()
+        seen0 = sorted(r.url for r in eng.result_seen().collect())
+        for r, use_bloom in ((1, False), (2, bloom2)):
+            eng = CrawlEngine(
+                spark, root, paths, validate_images=False,
+                use_bloom=use_bloom, bloom_buckets=8, bloom_bits=1 << 16,
+            )
+            eng.forget(spark.createDataFrame([(u,) for u in seen0[r::5]], ["url"]))
+            eng.new_round()
+            eng.run(resume=True)
+        outs[label] = (
+            sorted(r.url for r in eng.result_seen().collect()),
+            eng.seen.read(spark).count(),
+            sorted(r.url for r in eng.deleted.read(spark).collect()),
+        )
+    assert outs["mixed"] == outs["plain"]
+    assert outs["plain"][0] == seen0 and outs["plain"][1] == len(seen0)
 
 
 def test_cuckoo_prefilter_matches_python_probe(spark, frames):
@@ -223,7 +260,7 @@ def test_engine_vacuum_preserves_current_state(spark, tmp_path):
 
     paths = ensure_corpus(SMOKE)
     eng = CrawlEngine(
-        spark, str(tmp_path / "wh"), paths, validate_images=False, cuckoo_shards=8
+        spark, str(tmp_path / "wh"), paths, validate_images=False
     )
     eng.run()
     seen = sorted(r.url for r in eng.result_seen().collect())
@@ -245,16 +282,27 @@ def test_resized_cuckoo_filter_probes_exactly(spark, frames):
     the probe derives the size from the blob. A build/probe size
     mismatch previously produced false not-tombstoned proofs that
     silently suppressed recrawls."""
-    seen, deleted, cand = frames
+    _, deleted, cand = frames
     big = cuckoo_build(deleted, n_buckets=16, filter_buckets=1 << 12).persist()
-    got = sorted(
-        r.url
-        for r in new_urls_exact(
-            cand, seen, deleted=deleted, cuckoo=big, cuckoo_shards=16
-        ).collect()
-    )
-    assert got == _expected(seen, deleted, cand)
-    # every tombstoned candidate must still register as maybe_deleted
+    stamped = {
+        r.url: r.maybe_deleted
+        for r in cuckoo_prefilter(cand.select("url").distinct(), big, n_buckets=16).collect()
+    }
+    # the probe agrees with the resized filter probed in pure python
+    from scrapeulous_spark.operators.cuckoo import CuckooFilter
+
+    shards = {r.bucket: bytes(r.filter) for r in big.collect()}
+    shard_of = {
+        r.url: r.b
+        for r in cand.select("url")
+        .withColumn("b", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
+        .collect()
+    }
+    for url, got in stamped.items():
+        b = shard_of[url]
+        want = b in shards and CuckooFilter.from_bytes(shards[b], 1 << 12).contains(url)
+        assert got == want, url
+    # every tombstoned url must still register as maybe_deleted
     stamped = cuckoo_prefilter(
         deleted.select("url").distinct(), big, n_buckets=16
     ).collect()
@@ -284,5 +332,5 @@ def test_null_host_does_not_break_hot_detection(spark):
         + [(f"c{i % 40}.example.com", f"c{i}") for i in range(80)],
         ["host", "url"],
     )
-    hot = detect_hot_hosts(df, n_buckets=8, skew_factor=2.0)
+    hot = detect_hot_hosts(df, n_buckets=8, total=df.count(), skew_factor=2.0)
     assert hot == ["hot.example.com"]

@@ -42,10 +42,11 @@ def _skewed_frontier(spark, hot_rows=800, cold_hosts=40, rows_per_cold=20):
 
 def test_detect_hot_hosts(spark):
     df = _skewed_frontier(spark)
-    hot = detect_hot_hosts(df, N_BUCKETS)
+    hot = detect_hot_hosts(df, N_BUCKETS, df.count())
     assert hot == ["hot.example.com"]
     # a uniform frontier has no hot hosts at the same threshold
-    assert detect_hot_hosts(_skewed_frontier(spark, hot_rows=0), N_BUCKETS) == []
+    uniform = _skewed_frontier(spark, hot_rows=0)
+    assert detect_hot_hosts(uniform, N_BUCKETS, uniform.count()) == []
 
 
 def test_salting_balances_and_colocates(spark):

@@ -82,6 +82,31 @@ def test_partitioned_and_plain_layouts_interchange(spark, table):
     assert sorted(r.host_bucket for r in got.filter("k in (2, 10)").collect()) == [2, 2]
 
 
+def test_partitioned_layout_recorded_in_manifest(spark, table):
+    """Each commit records which data dirs are hive-partitioned, so a
+    read never lists a dir to find its layout; the partitioned dir
+    keeps its directory-pruned scan."""
+    table.append(_df(spark, 0, 8), partition_by="host_bucket")
+    snap = table.append(_df(spark, 8, 12))
+    assert list(snap["partitioned"].values()) == ["host_bucket"]
+    assert set(snap["partitioned"]) < set(snap["dirs"])
+    assert table.overwrite(_df(spark, 0, 2))["partitioned"] == {}
+    table.append(_df(spark, 2, 6), partition_by="host_bucket")
+    got = table.read(spark).filter("host_bucket = 1")
+    assert sorted(r.k for r in got.collect()) == [1, 5]
+
+
+def test_half_written_manifest_is_not_a_snapshot(spark, table):
+    """A concurrent commit writes its manifest to a ``.tmp-*`` file and
+    renames it into place; until then readers must not parse it."""
+    table.append(_df(spark, 0, 3))
+    with open(f"{table._snap_dir}/.tmp-0123abcd", "w") as f:
+        f.write('{"snapshot_id": 2, "dirs": [')  # cut mid-write
+    assert [s["snapshot_id"] for s in table.snapshots()] == [1]
+    assert table.read(spark).count() == 3
+    assert table.append(_df(spark, 3, 4))["snapshot_id"] == 2
+
+
 def test_lineage_recorded_on_snapshot(spark, table):
     snap = table.append(_df(spark, 0, 2), lineage={"superstep": 7, "stage": "x"})
     assert snap["lineage"] == {"superstep": 7, "stage": "x"}
