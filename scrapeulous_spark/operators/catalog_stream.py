@@ -1,7 +1,7 @@
 """Structured-Streaming operators as driver-verifiable catalog queries
 (round-2 verdict #6: the streaming twins had pytest coverage but no
 CORRECTNESS row — each now runs as a bounded availableNow micro-batch
-drain into a memory sink, with a DuckDB batch twin over the SAME
+drain into a file sink (run_to_files), with a DuckDB batch twin over the SAME
 deterministic parquet input, so the driver's rows+schema+hash compare
 covers the streaming plans too).
 

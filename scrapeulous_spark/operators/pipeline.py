@@ -2434,8 +2434,7 @@ def dedup_ppjoin_prefix(spark, sf):
     pairs encode the raw op's full O(m^2)-per-cluster clique output in
     O(m) rows — and, measured at sf0.1, remove the single 248-doc
     cluster that dominated both candidate generation and verification
-    (~110s -> ~10.5s after the round-4 rework; LSH ~3s). The un-collapsed variant
-    stays available as dedup_ppjoin_prefix_raw (import-level knob).
+    (~110s -> ~10.5s after the round-4 rework; LSH ~3s).
 
     OUTPUT CONTRACT (expansion rule): the result is NOT the literal
     qualifying-pair set. Rows are (a) rep-to-rep qualifying pairs and
@@ -2443,8 +2442,7 @@ def dedup_ppjoin_prefix(spark, sf):
     needs the raw clique expands it as: substitute any star member for
     its rep in every rep pair (identical sets have identical Jaccard
     to everything, so the jac value carries over), and add all
-    within-star member pairs at jac=1000; or use
-    dedup_ppjoin_prefix_raw for the literal output.
+    within-star member pairs at jac=1000.
 
     Scale shape: the frequency join orders prefixes by the RAREST
     tokens, so prefix-collision fanout is bounded by rare-token
@@ -2474,14 +2472,6 @@ def dedup_ppjoin_prefix(spark, sf):
         mem.filter(F.col("doc_id") == F.col("rep")).select("doc_id"), "doc_id"
     )
     return _ppjoin_pairs(rsets).unionByName(ident)
-
-
-def dedup_ppjoin_prefix_raw(spark, sf):
-    """Un-collapsed PPJoin: the full clique output (every qualifying
-    doc pair, O(m^2) per identical cluster). Exact-recall reference
-    variant; not registered — the collapsed composition above is the
-    shipped default."""
-    return _ppjoin_pairs(_token_sets(spark, sf))
 
 
 def _token_sets(spark, sf):

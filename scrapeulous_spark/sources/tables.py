@@ -107,55 +107,6 @@ class SnapshotTable:
         analog) so per-partition reads are directory-pruned scans."""
         return self._commit(self._write_data(df, partition_by), partition_by, lineage)
 
-    def merge(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        key_cols: list[str],
-        lineage: dict | None = None,
-        partition_by: str | None = None,
-    ) -> dict:
-        """MERGE INTO (upsert-by-key): rows of `source` replace target
-        rows with the same key; unmatched source rows insert — the
-        copy-on-write Iceberg MERGE the north rule names for the
-        frontier. Implemented as the standard COW plan: target
-        LEFT-ANTI source on the key (survivors) unioned with source,
-        written as a NEW snapshot — so the merge is itself atomic,
-        time-travelable, and rollback-able like every other commit.
-        The anti-join is an equi-join on the key (broadcast when the
-        delta is small — the common case: one superstep's frontier
-        delta vs the accumulated table). At real-Iceberg swap time this
-        maps onto MERGE INTO ... WHEN MATCHED THEN UPDATE WHEN NOT
-        MATCHED THEN INSERT.
-
-        Iceberg-faithful validation: a source with duplicate keys (the
-        MERGE cardinality error) or NULL keys (never equi-matches, so
-        every replay would re-insert it — silently breaking replay
-        idempotence) is rejected up front. Both probes run on the
-        small delta side only."""
-        null_pred = None
-        for k in key_cols:
-            c = F.col(k).isNull()
-            null_pred = c if null_pred is None else (null_pred | c)
-        if source.filter(null_pred).limit(1).count() > 0:
-            raise ValueError(f"{self.name}.merge: NULL in key columns {key_cols}")
-        dups = (
-            source.groupBy(*key_cols)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .count()
-        )
-        if dups:
-            raise ValueError(
-                f"{self.name}.merge: source has duplicate keys on {key_cols} "
-                "(MERGE cardinality violation)"
-            )
-        target = self.read(spark)
-        survivors = target.join(source.select(*key_cols), key_cols, "left_anti")
-        merged = survivors.unionByName(source)
-        return self._commit(self._write_data(merged, partition_by), partition_by, lineage)
-
     # ---------------------------------------------------------------- read
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:

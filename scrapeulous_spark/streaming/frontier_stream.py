@@ -1,90 +1,24 @@
-"""Structured Streaming variant of the ingest/extract stage.
+"""Structured Streaming twins of batch catalog operators.
 
 The reference is batch-iterative (SURVEY.md §2.8) — no watermarks or
 event-time windows exist in it — so streaming is an ENGINE EXTENSION:
-the natural deployment shape when seed batches arrive continuously
+the natural deployment shape when fetch events arrive continuously
 (the cloud-crawler's job queue, README.md:7-11 analog).
 
-Two streaming pipelines, both built from the same operators the batch
-engine uses (extraction is the identical column-expression library):
-
-  * stream_seed_entities: seeds arrive as files in a directory
-    (file-source micro-batches) -> fetch-join against the page store
-    -> per-page entity extraction -> append sink. Stateless,
-    exactly-once via checkpoint + idempotent sink.
-  * stream_fetch_rate: watermarked sliding-window fetch-rate per host
-    — the politeness monitor (crawl_delay accounting) as an event-time
-    windowed aggregation with late-data tolerance.
-
-Tested with trigger(availableNow=True) so tests run to completion
-deterministically (tests/test_streaming.py).
+  * stream_sessionize: gap-based session windows per key, the twin of
+    agg_event_sessionize.
+  * stream_fetch_attribution / stream_fetch_timeouts: stream-stream
+    interval joins of fetch requests and responses (inner and
+    left-outer), sharing one pairing condition.
+  * run_to_files: the availableNow drain into a file sink that the
+    stream_*_run catalog queries (operators/catalog_stream.py) ship
+    through.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..operators.extract import extract_entities_raw
-from ..operators.fetch import fetch_join
-
-SEED_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("seed_id", T.LongType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("priority", T.DoubleType()),
-        T.StructField("event_ts", T.TimestampType()),
-    ]
-)
-
-
-def read_seed_stream(spark: SparkSession, seeds_dir: str, max_files_per_trigger: int = 4) -> DataFrame:
-    return (
-        spark.readStream.schema(SEED_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(seeds_dir)
-    )
-
-
-def stream_seed_entities(seed_stream: DataFrame, pages: DataFrame) -> DataFrame:
-    """Stream-static join (stream side = seeds, static side = page
-    store), then the batch engine's own extraction expressions. The
-    stream never shuffles state: fetch is a per-batch join, extraction
-    is narrow — this is the stateless fast path."""
-    fetched = fetch_join(seed_stream.select("seed_id", "url", "event_ts"), pages)
-    ok = fetched.filter("fetch_ok")
-    return extract_entities_raw(
-        ok.select("seed_id", F.lit(0).alias("page_order"), "body")
-    )
-
-
-def stream_fetch_rate(seed_stream: DataFrame, pages: DataFrame, window: str = "10 seconds",
-                      slide: str = "5 seconds", watermark: str = "30 seconds") -> DataFrame:
-    """Politeness monitor: fetches per host per sliding event-time
-    window, with a watermark bounding late-data state. The batch twin
-    is the window-function rate accounting in frontier.schedule_pops;
-    this is its continuous analog (per-host crawl_delay enforcement
-    would gate on these counts)."""
-    from ..functions import urls as U
-
-    fetched = fetch_join(seed_stream.select("seed_id", "url", "event_ts"), pages)
-    return (
-        fetched.withColumn("host", U.host_col(F.col("url")))
-        .withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window, slide).alias("w"), "host")
-        .agg(
-            F.count(F.lit(1)).alias("n_fetches"),
-            F.sum(F.col("fetch_ok").cast("long")).alias("n_ok"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "host",
-            "n_fetches",
-            "n_ok",
-        )
-    )
 
 
 def stream_sessionize(
@@ -206,7 +140,7 @@ def run_to_files(
     return a DataFrame reading the sink directory back — rows never
     round-trip through the driver (executors write parquet; the
     returned plan is an ordinary pruned/pushed-down scan), so the same
-    drain shape works at any scale, unlike the memory-sink harness.
+    drain shape works at any scale.
 
     append mode uses the native parquet sink (its _spark_metadata
     commit log makes the read-back exactly the committed files);
@@ -250,24 +184,3 @@ def run_to_files(
     q.awaitTermination()
     # explicit schema: a zero-row drain leaves nothing to infer from
     return stream_df.sparkSession.read.schema(stream_df.schema).parquet(out_dir)
-
-
-def run_to_completion(stream_df: DataFrame, checkpoint: str, output_mode: str = "append"):
-    """Drain all available input with availableNow and return the
-    collected rows from a memory sink (test/driver harness helper)."""
-    import re as _re
-
-    # every non-identifier char must go (a '.' in the path would parse
-    # as a catalog separator in the SELECT below), and the name must
-    # not start with a digit
-    name = "stream_out_" + _re.sub(r"[^A-Za-z0-9_]", "_", checkpoint)[-32:]
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")

@@ -1,21 +1,14 @@
-"""Structured Streaming variant of the image+caption curation front:
-admission gate -> payload decode, as a continuously-running pipeline.
+"""Structured Streaming twin of the img_admission_gate catalog query.
 
 The reference has no streaming ingestion (its cloud workers process
 job batches), so — like frontier_stream.py — this is an ENGINE
 EXTENSION: the deployment shape when image+caption rows land
 continuously (a crawler's output topic / an object-store drop
-directory). Both stages are the IDENTICAL code the batch engine runs:
-the gate is operators/catalog_engine.admission_flags() verbatim, the
-decode is operators/multimodal.image_features' mapInPandas (stateless
-Arrow batches work unchanged on a streaming DataFrame).
-
-Order is the scale property: the gate is a metadata-only projection,
-so rejected payloads are dropped BEFORE the decode stage ever
-deserializes their bytes — at 10^10 images the decode (the expensive
-stage) runs only on admitted rows, and the stream is stateless
-end-to-end (no watermark needed; exactly-once comes from checkpoint +
-idempotent sink).
+directory). The gate is the IDENTICAL code the batch engine runs
+(operators/catalog_engine.apply_admission_gate): a metadata-only
+projection, so payload bytes never deserialize and the stream is
+stateless end-to-end (no watermark needed; exactly-once comes from
+checkpoint + idempotent sink).
 """
 
 from __future__ import annotations
@@ -24,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..operators.catalog_engine import apply_admission_gate
-from ..operators.multimodal import image_features
 
 IMAGE_STREAM_SCHEMA = T.StructType(
     [
@@ -55,16 +47,3 @@ def stream_image_admission(images: DataFrame) -> DataFrame:
     construction (same column expressions)."""
     return apply_admission_gate(images)
 
-
-def stream_image_curation(images: DataFrame) -> DataFrame:
-    """Gate -> decode, cheapest cut first: only admitted rows reach the
-    Arrow decode batch. Emits the feature rows with the caption carried
-    through the decode (the same zero-self-join passthrough the batch
-    img_caption_align uses)."""
-    # the gate applies as a FILTER on the full row (a semi-join against
-    # the gated projection would be a stream-stream join needing
-    # watermarks — pointless for a stateless predicate)
-    from ..operators.catalog_engine import admission_flags
-
-    admitted = images.filter(admission_flags()["admitted"])
-    return image_features(admitted, passthrough=("caption",))

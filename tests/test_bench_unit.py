@@ -47,72 +47,6 @@ def test_pagination_oracle_sql_unrolls_n_steps():
         assert sql.count("UNION ALL") == n - 1
 
 
-def test_profile_attribution_interval_union_and_totals():
-    """attribute_events: job-interval union coverage must merge
-    overlapping FAIR-pool jobs (no double counting), exclude pre-t0
-    warm-up jobs/tasks, and total only timed-window task metrics."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "profile_crawl",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "profile_crawl.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    def job(jid, sub, end, stages, pool="default"):
-        return [
-            {
-                "Event": "SparkListenerJobStart",
-                "Job ID": jid,
-                "Submission Time": sub,
-                "Properties": {"spark.scheduler.pool": pool},
-                "Stage Infos": [{"Stage ID": s} for s in stages],
-            },
-            {"Event": "SparkListenerJobEnd", "Job ID": jid, "Completion Time": end},
-        ]
-
-    def task(stage, launch, run_ms, gc_ms=0, cpu_ns=0):
-        return {
-            "Event": "SparkListenerTaskEnd",
-            "Stage ID": stage,
-            "Task Info": {"Launch Time": launch},
-            "Task Metrics": {
-                "Executor Run Time": run_ms,
-                "JVM GC Time": gc_ms,
-                "Executor CPU Time": cpu_ns,
-            },
-        }
-
-    t0 = 10_000
-    events = (
-        job(0, 1_000, 5_000, [0])          # warm-up job: excluded (sub < t0)
-        + job(1, 10_000, 20_000, [1])      # [10, 20]
-        + job(2, 15_000, 30_000, [2], "extract")  # overlaps -> union [10, 30]
-        + job(3, 34_000, 38_000, [3])      # gap [30, 34] = 4s no-job
-        + [
-            task(0, 1_500, 99_999),        # warm-up task: excluded from totals
-            task(1, 10_100, 8_000, gc_ms=500, cpu_ns=6_000_000_000),
-            task(2, 15_200, 12_000),
-            task(3, 34_100, 2_000),
-        ]
-    )
-    r = mod.attribute_events(events, t0, cpus=4)
-    assert r["wall_s"] == 28.0            # 10_000 -> 38_000
-    assert r["covered_s"] == 24.0         # [10,30] + [34,38]
-    assert r["no_job_s"] == 4.0
-    assert r["n_jobs"] == 3
-    assert r["task_run_s"] == 22.0        # 8 + 12 + 2, warm-up excluded
-    assert r["gc_s"] == 0.5
-    assert r["jvm_cpu_s"] == 6.0
-    assert abs(r["occupancy"] - 22.0 / (4 * 28.0)) < 1e-9
-    # jobs sorted by duration desc; task_s attributed via stage->job
-    assert [round(j["dur_s"], 1) for j in r["jobs"]] == [15.0, 10.0, 4.0]
-    assert r["jobs"][0]["pool"] == "extract"
-    assert r["jobs"][0]["task_s"] == 12.0
-
-
 def test_cleanest_pair_efficiency_selects_by_contention_not_ratio():
     """The reported pair is the one with the smallest normalized wall
     (least contended window), even when a noisier pair carries a

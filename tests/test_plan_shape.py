@@ -367,6 +367,16 @@ def test_curation_pipeline_single_exchange(spark, registry):
     assert "Join" not in plan
 
 
+def test_minhash_signatures_single_exchange(spark, registry):
+    """dedup_minhash_signatures (PLANS.md): the 16 signature lanes fold
+    as combinable min aggregates in one groupBy, so the per-document
+    aggregate is the ONLY shuffle, and the unpivot to (doc_id, seed,
+    minhash) runs after it."""
+    plan = _plan(registry["dedup_minhash_signatures"].spark(spark, _SF))
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
+    assert "Join" not in plan
+
+
 def test_phash_neardup_plan_joinless_and_payload_free(spark, registry):
     """The multi-index pair stage is a groupBy + in-bucket expansion:
     NO join anywhere in the plan (a self-join would recompute the

@@ -1,6 +1,6 @@
-"""Structured Streaming extension tests: the streaming extract stage
-must produce exactly the batch engine's results on the same seeds, and
-the watermarked rate monitor must aggregate correctly."""
+"""Structured Streaming extension tests: each streaming twin, drained
+through run_to_files (the drain the stream_*_run catalog queries ship
+through), must produce exactly the batch result on the same input."""
 
 import datetime
 import os
@@ -12,85 +12,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from scrapeulous_spark.operators.extract import extract_entities_raw
-from scrapeulous_spark.operators.fetch import fetch_join
 from scrapeulous_spark.sources.corpus import SMOKE, ensure_corpus
-from scrapeulous_spark.streaming.frontier_stream import (
-    read_seed_stream,
-    run_to_completion,
-    stream_fetch_rate,
-    stream_seed_entities,
-)
+from scrapeulous_spark.streaming.frontier_stream import run_to_files
 
 
-@pytest.fixture(scope="module")
-def stream_env(spark):
-    paths = ensure_corpus(SMOKE)
-    seeds = pq.read_table(paths["seeds"]).to_pylist()
-    valid = [s for s in seeds if s["url"].startswith("http")]
-    base = datetime.datetime(2024, 1, 1)
-    d = tempfile.mkdtemp(prefix="seed_stream_")
-    # three micro-batch files with event timestamps spread over 30s
-    for i in range(3):
-        chunk = valid[i::3]
-        pq.write_table(
-            pa.table(
-                {
-                    "seed_id": pa.array([s["seed_id"] for s in chunk], pa.int64()),
-                    "url": pa.array([s["url"] for s in chunk], pa.string()),
-                    "priority": pa.array([s["priority"] for s in chunk], pa.float64()),
-                    "event_ts": pa.array(
-                        [base + datetime.timedelta(seconds=3 * i + j) for j in range(len(chunk))],
-                        pa.timestamp("us"),
-                    ),
-                }
-            ),
-            os.path.join(d, f"batch_{i}.parquet"),
-        )
-    return d, paths
-
-
-def test_stream_entities_match_batch(spark, stream_env):
-    seeds_dir, paths = stream_env
-    pages = spark.read.parquet(paths["pages"])
-
-    stream = read_seed_stream(spark, seeds_dir, max_files_per_trigger=1)
-    with tempfile.TemporaryDirectory() as ckpt:
-        got = run_to_completion(stream_seed_entities(stream, pages), ckpt).collect()
-
-    batch_seeds = spark.read.parquet(paths["seeds"]).filter(
-        F.col("url").startswith("http")
-    )
-    fetched = fetch_join(batch_seeds.select("seed_id", "url"), pages).filter("fetch_ok")
-    want = extract_entities_raw(
-        fetched.select("seed_id", F.lit(0).alias("page_order"), "body")
-    ).collect()
-
-    key = lambda r: (r.seed_id, r.kind, r.page_order, r.match_pos, r.value)
-    assert sorted(map(key, got)) == sorted(map(key, want))
-    assert len(got) > 0
-
-
-def test_stream_fetch_rate_windows(spark, stream_env):
-    seeds_dir, paths = stream_env
-    pages = spark.read.parquet(paths["pages"])
-    stream = read_seed_stream(spark, seeds_dir)
-    # complete mode: append-mode windows only emit once the watermark
-    # passes them, so at end-of-stream the trailing windows would never
-    # close — a monitor wants the full current state anyway
-    with tempfile.TemporaryDirectory() as ckpt:
-        rates = run_to_completion(
-            stream_fetch_rate(stream, pages), ckpt, output_mode="complete"
-        ).collect()
-    assert rates, "complete mode emits all windows at availableNow drain"
-    # windows are 10s wide sliding by 5s; counts per (host, window) >= 1
-    for r in rates:
-        assert (r.window_end - r.window_start).total_seconds() == 10.0
-        assert r.n_fetches >= r.n_ok >= 0
-    # total fetch count across one non-overlapping window family equals seed count
-    total = sum(r.n_fetches for r in rates if r.window_start.second % 10 == 0)
-    n_valid = spark.read.parquet(paths["seeds"]).filter(F.col("url").startswith("http")).count()
-    assert total == n_valid
+def _drain(df, d):
+    return run_to_files(df, os.path.join(d, "ck"), os.path.join(d, "out")).collect()
 
 
 def test_stream_sessionize_matches_batch_sessions(spark):
@@ -103,7 +30,7 @@ def test_stream_sessionize_matches_batch_sessions(spark):
     src = "/root/testdata/sf0.001/events.parquet"
     batch = spark.read.parquet(src)
     schema = batch.schema
-    with tempfile.TemporaryDirectory() as d, tempfile.TemporaryDirectory() as ckpt:
+    with tempfile.TemporaryDirectory() as d, tempfile.TemporaryDirectory() as sink:
         # shard the events CHRONOLOGICALLY into stream files (a real
         # stream arrives roughly in event order): a random shard would
         # put the max timestamp in batch 1, advance the watermark to
@@ -122,10 +49,9 @@ def test_stream_sessionize_matches_batch_sessions(spark):
         stream = (
             spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d)
         )
-        got = run_to_completion(
-            stream_sessionize(stream, gap="30 minutes", watermark="1 hour"),
-            ckpt,
-        ).collect()
+        got = _drain(
+            stream_sessionize(stream, gap="30 minutes", watermark="1 hour"), sink
+        )
 
     max_ts = batch.agg(F.max("ts")).collect()[0][0]
     cutoff = max_ts - datetime.timedelta(hours=1)
@@ -153,20 +79,15 @@ def test_stream_sessionize_matches_batch_sessions(spark):
         assert (r.session_end - r.session_start) >= datetime.timedelta(minutes=30)
 
 
-def test_stream_image_admission_and_curation_match_batch(spark):
-    """The streaming image pipeline (gate -> decode) must emit exactly
-    the batch results on the same corpus files: admission flags for
-    every image (stateless projection twin of img_admission_gate) and
-    decoded feature rows ONLY for admitted images, split across
-    micro-batches (maxFilesPerTrigger=1 over several input files)."""
-    import shutil
-
+def test_stream_image_admission_matches_batch(spark):
+    """The streaming admission gate (stateless projection twin of
+    img_admission_gate) must emit exactly the batch flags for every
+    image on the same corpus files, split across micro-batches
+    (maxFilesPerTrigger=1 over several input files)."""
     from scrapeulous_spark.operators import load_all_catalogs
-    from scrapeulous_spark.operators.multimodal import image_features
     from scrapeulous_spark.streaming.image_stream import (
         read_image_stream,
         stream_image_admission,
-        stream_image_curation,
     )
 
     paths = ensure_corpus(SMOKE)
@@ -181,64 +102,24 @@ def test_stream_image_admission_and_curation_match_batch(spark):
             pq.write_table(imgs.slice(lo, 25), os.path.join(src, f"part{i}.parquet"))
 
         stream = read_image_stream(spark, src, max_files_per_trigger=1)
-        got_gate = {
-            r.image_id: r
-            for r in run_to_completion(
-                stream_image_admission(stream), os.path.join(d, "ck1")
-            ).collect()
-        }
-        want_gate = {
-            r.image_id: r for r in reg["img_admission_gate"].spark(spark, "x").collect()
-        }
-        assert set(got_gate) == set(want_gate)
-        for iid, w in want_gate.items():
-            g = got_gate[iid]
-            assert (g.size_ok, g.aspect_ok, g.fmt_ok, g.cap_ok, g.admitted) == (
-                w.size_ok, w.aspect_ok, w.fmt_ok, w.cap_ok, w.admitted
-            ), iid
-
-        stream2 = read_image_stream(spark, src, max_files_per_trigger=1)
-        got_cur = {
-            r.image_id: r
-            for r in run_to_completion(
-                stream_image_curation(stream2), os.path.join(d, "ck2")
-            ).collect()
-        }
-        batch_imgs = spark.read.parquet(paths["images"])
-        from scrapeulous_spark.operators.catalog_engine import admission_flags
-
-        want_cur = {
-            r.image_id: r
-            for r in image_features(
-                batch_imgs.filter(admission_flags()["admitted"]),
-                passthrough=("caption",),
-            ).collect()
-        }
-        assert set(got_cur) == set(want_cur)
-        admitted_ids = {i for i, r in want_gate.items() if r.admitted}
-        assert set(got_cur) == admitted_ids and 0 < len(admitted_ids) < n
-        for iid, w in want_cur.items():
-            g = got_cur[iid]
-            assert (
-                g.mean_r_x1000, g.mean_g_x1000, g.mean_b_x1000,
-                g.std_gray_x1000, g.phash, g.caption,
-            ) == (
-                w.mean_r_x1000, w.mean_g_x1000, w.mean_b_x1000,
-                w.std_gray_x1000, w.phash, w.caption,
-            ), iid
+        got_gate = {r.image_id: r for r in _drain(stream_image_admission(stream), d)}
+    want_gate = {
+        r.image_id: r for r in reg["img_admission_gate"].spark(spark, "x").collect()
+    }
+    assert set(got_gate) == set(want_gate)
+    for iid, w in want_gate.items():
+        g = got_gate[iid]
+        assert (g.size_ok, g.aspect_ok, g.fmt_ok, g.cap_ok, g.admitted) == (
+            w.size_ok, w.aspect_ok, w.fmt_ok, w.cap_ok, w.admitted
+        ), iid
+    assert 0 < sum(w.admitted for w in want_gate.values()) < n
 
 
 def test_stream_stream_attribution_interval_join(spark):
     """Stream-stream interval join: responses attribute to the request
     within [event_ts, event_ts + 15s] on the same url; out-of-window
     responses match nothing. Expected set recomputed in Python."""
-    import datetime
-    import tempfile
-
-    from scrapeulous_spark.streaming.frontier_stream import (
-        run_to_completion,
-        stream_fetch_attribution,
-    )
+    from scrapeulous_spark.streaming.frontier_stream import stream_fetch_attribution
 
     base = datetime.datetime(2024, 1, 1)
     reqs = [(i, f"http://h{i % 3}.example.com/p{i}", base + datetime.timedelta(seconds=i)) for i in range(12)]
@@ -281,11 +162,8 @@ def test_stream_stream_attribution_interval_join(spark):
     req_stream = spark.readStream.schema(req_schema).parquet(rdir)
     resp_stream = spark.readStream.schema(resp_schema).parquet(pdir)
     joined = stream_fetch_attribution(req_stream, resp_stream)
-    with tempfile.TemporaryDirectory() as ckpt:
-        got = {
-            (r.seed_id, r.status, r.lag_ms)
-            for r in run_to_completion(joined, ckpt).collect()
-        }
+    with tempfile.TemporaryDirectory() as d:
+        got = {(r.seed_id, r.status, r.lag_ms) for r in _drain(joined, d)}
     want = {(i, 200, 2000) for (i, _u, _t) in reqs if i % 2 == 0}
     want.add((0, 304, 9000))  # second in-window response for p0
     assert got == want
@@ -297,13 +175,7 @@ def test_stream_stream_timeout_left_outer(spark):
     watermark passes request_ts + max_lag. A far-future flush row on
     the response stream advances the watermark so availableNow drains
     every pending outer row deterministically."""
-    import datetime
-    import tempfile
-
-    from scrapeulous_spark.streaming.frontier_stream import (
-        run_to_completion,
-        stream_fetch_timeouts,
-    )
+    from scrapeulous_spark.streaming.frontier_stream import stream_fetch_timeouts
 
     base = datetime.datetime(2024, 1, 1)
     reqs = [(i, f"http://h.example.com/p{i}", base + datetime.timedelta(seconds=i)) for i in range(8)]
@@ -349,30 +221,18 @@ def test_stream_stream_timeout_left_outer(spark):
         "url string, status int, resp_ts timestamp"
     ).parquet(pdir)
     joined = stream_fetch_timeouts(req_stream, resp_stream)
-    with tempfile.TemporaryDirectory() as ckpt:
-        got = {
-            (r.seed_id, r.matched, r.status)
-            for r in run_to_completion(joined, ckpt).collect()
-        }
+    with tempfile.TemporaryDirectory() as d:
+        got = {(r.seed_id, r.matched, r.status) for r in _drain(joined, d)}
     want = {(i, True, 200) for (i, _u, _t) in reqs if i % 2 == 0}
     want |= {(i, False, None) for (i, _u, _t) in reqs if i % 2 == 1}
     assert got == want
 
 
 def test_run_to_files_matches_memory_drain_and_handles_empty(spark, tmp_path):
-    """The file-sink drain (round 4 — what the stream_* catalog queries
-    ship through) must return exactly what the memory-sink harness
-    returns, in both sink modes, and tolerate a zero-row drain (no
-    committed files: the explicit read schema is what makes the empty
-    directory readable)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from scrapeulous_spark.streaming.frontier_stream import (
-        run_to_completion,
-        run_to_files,
-    )
-
+    """The file-sink drain (what the stream_* catalog queries ship
+    through) must return exactly the drained rows in both sink modes,
+    and tolerate a zero-row drain (no committed files: the explicit
+    read schema is what makes the empty directory readable)."""
     src = tmp_path / "src"
     src.mkdir()
     pq.write_table(
@@ -381,12 +241,6 @@ def test_run_to_files_matches_memory_drain_and_handles_empty(spark, tmp_path):
     stream = spark.readStream.schema("k long").parquet(str(src))
     agg = stream.groupBy("k").count()
 
-    mem = {
-        (r["k"], r["count"])
-        for r in run_to_completion(
-            agg, str(tmp_path / "ck_mem"), output_mode="complete"
-        ).collect()
-    }
     filed = {
         (r["k"], r["count"])
         for r in run_to_files(
@@ -396,7 +250,7 @@ def test_run_to_files_matches_memory_drain_and_handles_empty(spark, tmp_path):
             output_mode="complete",
         ).collect()
     }
-    assert filed == mem == {(1, 1), (2, 1), (3, 1)}
+    assert filed == {(1, 1), (2, 1), (3, 1)}
 
     # append mode through the native parquet sink
     out = run_to_files(
@@ -423,10 +277,6 @@ def test_run_to_files_rejects_update_mode(tmp_path):
     so the overwrite-per-batch file materialization would silently drop
     keys updated in earlier micro-batches (round-4 ADVICE,
     frontier_stream.py:227) — run_to_files must refuse it up front."""
-    import pytest
-
-    from scrapeulous_spark.streaming.frontier_stream import run_to_files
-
     with pytest.raises(ValueError, match="update"):
         run_to_files(
             None, str(tmp_path / "ck"), str(tmp_path / "out"),

@@ -111,53 +111,3 @@ def test_lineage_recorded_on_snapshot(spark, table):
     snap = table.append(_df(spark, 0, 2), lineage={"superstep": 7, "stage": "x"})
     assert snap["lineage"] == {"superstep": 7, "stage": "x"}
     assert table.current()["lineage"]["superstep"] == 7
-
-
-def test_merge_upserts_by_key_and_snapshots(spark, table):
-    """merge(): same-key rows are replaced, new keys insert, untouched
-    rows survive; the merge is a NEW snapshot (time travel shows the
-    pre-merge state; rollback undoes the merge)."""
-    table.overwrite(_df(spark, 0, 10))  # keys 0..9, v = "v{k}"
-    pre = table.current()["snapshot_id"]
-    delta = spark.createDataFrame(
-        [(5, "UPDATED", 0), (99, "INSERTED", 1)], SCHEMA
-    )
-    table.merge(spark, delta, ["k"])
-    got = {(r.k, r.v) for r in table.read(spark).collect()}
-    want = {(k, f"v{k}") for k in range(10) if k != 5} | {(5, "UPDATED"), (99, "INSERTED")}
-    assert got == want
-    # time travel: the pre-merge snapshot still reads the old state
-    old = {(r.k, r.v) for r in table.read(spark, snapshot_id=pre).collect()}
-    assert old == {(k, f"v{k}") for k in range(10)}
-    # rollback undoes the merge atomically
-    table.rollback(pre)
-    back = {(r.k, r.v) for r in table.read(spark).collect()}
-    assert back == old
-
-
-def test_merge_is_idempotent_reapplied(spark, table):
-    """Re-applying the same delta produces the same table — the
-    resume-protocol property: a replayed superstep MERGE cannot
-    duplicate rows."""
-    table.overwrite(_df(spark, 0, 5))
-    delta = spark.createDataFrame([(2, "X", 0), (7, "Y", 1)], SCHEMA)
-    table.merge(spark, delta, ["k"])
-    once = sorted((r.k, r.v) for r in table.read(spark).collect())
-    table.merge(spark, delta, ["k"])
-    twice = sorted((r.k, r.v) for r in table.read(spark).collect())
-    assert once == twice
-
-
-def test_merge_rejects_duplicate_and_null_keys(spark, table):
-    """Iceberg MERGE cardinality semantics: duplicate source keys and
-    NULL keys are rejected up front (a NULL key would silently
-    re-insert on every replay)."""
-    table.overwrite(_df(spark, 0, 3))
-    dup = spark.createDataFrame([(1, "a", 0), (1, "b", 0)], SCHEMA)
-    with pytest.raises(ValueError, match="duplicate keys"):
-        table.merge(spark, dup, ["k"])
-    nul = spark.createDataFrame([(None, "a", 0)], SCHEMA)
-    with pytest.raises(ValueError, match="NULL in key"):
-        table.merge(spark, nul, ["k"])
-    # the failed merges committed nothing
-    assert table.current()["snapshot_id"] == 1
